@@ -681,14 +681,17 @@ _LATIN_EXCLUSIVE: list[tuple["re.Pattern[str]", str]] = [
 
 #: char → language for the single combined exclusive-letter scan.
 #: Derived from _LATIN_EXCLUSIVE (the semantic source of truth): every
-#: pattern is a single-char class except Maltese "ħ|għ", whose every
-#: match contains ħ — tests/test_langid.py pins the derivation.
+#: pattern is a single-char class or a single char except Maltese
+#: "ħ|għ", whose every match contains ħ — tests/test_langid.py pins the
+#: derivation.
 _EXCL_CHAR2LANG: dict[str, str] = {}
 for _p, _lang in _LATIN_EXCLUSIVE:
     _src = _p.pattern
     if _src.startswith("[") and _src.endswith("]"):
         for _ch in _src[1:-1]:
             _EXCL_CHAR2LANG[_ch] = _lang
+    elif len(_src) == 1:
+        _EXCL_CHAR2LANG[_src] = _lang
 _EXCL_CHAR2LANG["ħ"] = "mt"
 _EXCL_CLASS_RE = re.compile(
     "[" + "".join(map(re.escape, _EXCL_CHAR2LANG)) + "]")
@@ -751,3 +754,16 @@ def detect_reliable(text: str) -> str | None:
     if not can_detect(text):
         return None
     return detect(text)
+
+
+def doc_language(counts: dict[str, int]) -> tuple[str, list[tuple[str, float, int]]]:
+    """Document language from per-line detections: the majority code
+    (ties to the smaller code) and the ``(lang, percent, rows)``
+    distribution, most rows first — the reference's ``<defaultLang>`` /
+    ``<languages>`` head (PDFExtract.java:1277-1285). ``("", [])`` when
+    no line was detected."""
+    if not counts:
+        return "", []
+    total = sum(counts.values())
+    ordered = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+    return ordered[0][0], [(l, c * 100.0 / total, c) for l, c in ordered]

@@ -953,11 +953,7 @@ def ensure_sketch_table(spark: SparkSession, sf_dir: str,
     import re
     import tempfile
 
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect: no context handle — key by session
-        app = str(id(spark))
-    key = (app, os.path.abspath(sf_dir))
+    key = (_app_id(spark), os.path.abspath(sf_dir))
     got = _SKETCH_TABLES.get(key)
     if got is not None and spark.catalog.tableExists(got):
         return got
@@ -976,6 +972,24 @@ def ensure_sketch_table(spark: SparkSession, sf_dir: str,
                        buckets=buckets)
     _SKETCH_TABLES[key] = table
     return table
+
+
+def _app_id(spark: SparkSession) -> str:
+    try:
+        return spark.sparkContext.applicationId
+    except Exception:  # Spark Connect: no context handle — key by session
+        return str(id(spark))
+
+
+def ingest_table_name(app_id: str, sf_dir: str) -> str:
+    """The lifecycle query's scratch sketch table (and tempdir path):
+    one per application and corpus, so concurrent sessions on one corpus
+    never interleave an overwrite with another's append."""
+    import hashlib
+    import os
+
+    key = f"{app_id}|{os.path.abspath(sf_dir)}"
+    return f"pdfx_ingest_{hashlib.sha1(key.encode()).hexdigest()[:10]}"
 
 
 #: two-batch ingest split for the registered lifecycle query:
@@ -999,7 +1013,6 @@ def ingest_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes are materialized (localCheckpoint) BEFORE the append — a
     lazy plan would re-list the table's files after the append and see
     its own batch as corpus."""
-    import hashlib
     import os
     import tempfile
 
@@ -1009,8 +1022,7 @@ def ingest_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = docs.filter(mod == INGEST_B1)
     b2 = docs.filter(mod == INGEST_B2)
 
-    digest = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    table = f"pdfx_ingest_{digest}"
+    table = ingest_table_name(_app_id(spark), sf_dir)
     path = os.path.join(tempfile.gettempdir(), table)
     # overwrite-then-append keeps repeated invocations deterministic:
     # every call rebuilds the bootstrap state before its single append

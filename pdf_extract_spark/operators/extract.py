@@ -43,7 +43,7 @@ class DocResult:
     n_pages: int = 0
     n_lines: int = 0
     n_media: int = 0
-    lines: list[Line] | None = None  # kept only when keep_lines=True (S7)
+    lines: list[Line] = field(default_factory=list)  # processed layout lines (S7 renderer)
     permission: dict | None = None  # S6 AccessPermission booleans (encrypted docs)
 
 
@@ -52,14 +52,13 @@ _DEFAULT_RULES = RuleSet()
 
 def extract_pdf(pdf_bytes: bytes, rules: RuleSet | None = None,
                 max_pages: int | None = None,
-                keep_lines: bool = False,
                 sj_scorer=None,
                 time_budget_s: float | None = None,
                 hooks: dict | None = None) -> DocResult:
     """Extract one PDF into ordered (kind, text, media_ref) spans.
 
-    ``keep_lines=True`` retains the processed layout lines on the result
-    for the S7 HTML renderer (functions/htmlout.py). ``sj_scorer`` is an
+    The processed layout lines stay on the result (``lines``) for the
+    S7 HTML renderer (functions/htmlout.py). ``sj_scorer`` is an
     optional :class:`~..functions.sentencejoin.SentenceJoinScorer` — the
     W4 model-based join stage (reference: sentenceJoin,
     PDFExtract.java:1092-1216), applied after the W3 rule joins.
@@ -195,13 +194,7 @@ def extract_pdf(pdf_bytes: bytes, rules: RuleSet | None = None,
             ln.lang = langid.detect_reliable(ln.text) or ""
             if ln.lang:
                 counts[ln.lang] = counts.get(ln.lang, 0) + 1
-        if counts:
-            total = sum(counts.values())
-            ordered = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-            res.lang = ordered[0][0]
-            res.lang_dist = [
-                (l, c * 100.0 / total, c) for l, c in ordered
-            ]
+        res.lang, res.lang_dist = langid.doc_language(counts)
         for ln in lines:
             if not ln.lang:
                 ln.lang = res.lang
@@ -243,8 +236,7 @@ def extract_pdf(pdf_bytes: bytes, rules: RuleSet | None = None,
     res.n_lines = len(lines)
     res.n_media = len(media)
     res.spans = _assemble_spans(lines, media)
-    if keep_lines:
-        res.lines = lines
+    res.lines = lines
     return res
 
 

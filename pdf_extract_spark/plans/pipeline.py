@@ -5,19 +5,25 @@ Input/output table shape (BASELINE.json input_hint):
     spans:  array<struct<kind:string, text:string, media_ref:string, offset:int>>
 
 ``kind='pdf'`` spans carry base64 PDF bytes in ``text`` (or a ``file://``
-pointer in ``media_ref``); ``kind='text'`` spans pass through
-normalize/repair; ``kind='media'`` spans pass through in order.
+pointer in ``media_ref``); ``kind='html'`` spans go through the DOM
+main-content strip; ``kind='text'`` spans pass through normalize/repair;
+``kind='media'`` spans pass through in order.
 
-Scale design (north rule: 10^12 docs, explicit partitioning/skew):
+One document path, two sinks: ``assemble_document`` turns a document's
+spans into a :class:`DocModel`, and ``extract_spans`` / ``extract_html``
+are two renderers over it, so both sinks give the same language, error
+and warnings for the same document.
+
+Scale design:
   * All per-document compute runs inside ONE ``mapInPandas`` pass — a
     narrow transformation with ZERO shuffles on the extraction path. Docs
     parallelize across partitions; Catalyst prunes the two input columns.
-  * Skew: the reference measured a 23× latency spread between its smallest
-    and largest fixture (BASELINE.md). We split the input into a small-doc
-    lane (hash-partitioned on doc_id) and a big-doc lane (round-robin so
-    each oversized PDF lands alone), then union — no global sort, no
-    driver-side size census. ``arrow.maxRecordsPerBatch`` bounds batch
-    memory so one giant doc can't OOM an Arrow batch.
+  * Parallelism comes from scan granularity. ``run_pipeline`` passes its
+    input through ``runtime.ensure_parallel_scan``, which repartitions
+    only a scan narrower than the cluster (e.g. a single-file input), so
+    every core gets work without a user-set partition count.
+    ``arrow.maxRecordsPerBatch`` bounds batch memory so one giant doc
+    can't OOM an Arrow batch.
   * Resume: output snapshot + per-partition lineage rows; a resumed run
     left-anti-joins the input against the committed output's doc_ids —
     a broadcast-able join at per-run failure scales.
@@ -26,9 +32,11 @@ Scale design (north rule: 10^12 docs, explicit partitioning/skew):
 from __future__ import annotations
 
 import base64
+import functools
 import time
 import uuid
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass, field
 from typing import Any
 
 import pandas as pd
@@ -111,10 +119,6 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# Docs whose pdf payload exceeds this many base64 chars go to the big-doc
-# lane (~1.5 MB of PDF ≈ the reference's skew threshold territory).
-BIG_DOC_B64_CHARS = 2_000_000
-
 _RULESET_CACHE: dict[str, Any] = {}
 _SCORER_CACHE: dict[str, Any] = {}
 
@@ -174,20 +178,13 @@ def _get_scorer(sj_model, sj_threshold: float | None):
     return sc
 
 
-def _extract_batches(
-    batches: Iterator[pd.DataFrame], config: dict | None, max_pages: int | None,
-    sj_model=None, sj_threshold: float | None = None,
-    time_budget_s: float | None = None, hooks: dict | None = None,
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: one output row per input document."""
-    from ..operators.extract import extract_pdf
-
-    rules = _get_ruleset(config)
+def _resolve_scorer(rules, sj_model, sj_threshold: float | None):
+    """The W4 scorer for a job: ``sj_model`` if given, else the
+    per-language models declared in the rule config
+    (``sentencejoin_model``, Config.java:126) — the in-process form of
+    the reference's one-worker-per-language cache (X2)."""
     scorer = _get_scorer(sj_model, sj_threshold)
     if scorer is None and getattr(rules, "sj_models", None):
-        # per-language models declared in the rule config
-        # (``sentencejoin_model``, Config.java:126) — the in-process form
-        # of the reference's one-worker-per-language cache (X2)
         scorers: dict[str, Any] = {}
         any_missing = False
         for lang, prefix in rules.sj_models.items():
@@ -200,134 +197,163 @@ def _extract_batches(
             scorer = scorers
         elif any_missing:
             scorer = "missing"
-    for pdf_batch in batches:
-        out_rows = []
-        for doc_id, spans in zip(pdf_batch["doc_id"], pdf_batch["spans"]):
-            t0 = time.monotonic()
-            row = _extract_one(str(doc_id), spans, rules, max_pages, extract_pdf,
-                               scorer, time_budget_s, hooks)
-            row["extract_ms"] = int((time.monotonic() - t0) * 1000)
-            out_rows.append(row)
-        yield pd.DataFrame(out_rows, columns=[f.name for f in OUTPUT_SCHEMA.fields])
+    return scorer
 
 
-def _extract_one(doc_id: str, spans, rules, max_pages, extract_pdf,
-                 scorer=None, time_budget_s: float | None = None,
-                 hooks: dict | None = None) -> dict:
-    out_spans: list[dict] = []
-    lang = ""
-    lang_dist: list[dict] = []
-    warnings: list[dict] = []
-    error = None
-    n_pages = n_lines = n_media = 0
-    permission = None
+@dataclass
+class DocModel:
+    """Everything either sink renders for one document."""
 
-    sj_scorer = None
+    spans: list[tuple[str, str, str]] = field(default_factory=list)  # kind,text,media_ref
+    # pdf lines (pagenos offset past earlier parts) plus one synthesized
+    # line per html-tier block and per text span, each on its own page
+    lines: list = field(default_factory=list)
+    lang_counts: dict[str, int] = field(default_factory=dict)  # detected lines
+    lang_attr: str = ""  # first declared <html lang>
+    warnings: list[tuple[str, str, str]] = field(default_factory=list)  # method,detail,suggestion
+    errors: list[str] = field(default_factory=list)  # per failed part, offset order
+    permission: dict | None = None  # first non-null pdf part's
+    n_pages: int = 0
+    n_lines: int = 0
+    n_media: int = 0
+
+    def language(self) -> tuple[str, list[tuple[str, float, int]]]:
+        """Majority over every part's detected lines; the declared
+        ``<html lang>`` only when no line in the doc was detected."""
+        from ..functions.langid import doc_language
+
+        lang, dist = doc_language(self.lang_counts)
+        return lang or self.lang_attr, dist
+
+    @property
+    def error(self) -> str | None:
+        return "; ".join(self.errors) or None
+
+
+def assemble_document(spans, rules, max_pages: int | None = None,
+                      scorer=None, time_budget_s: float | None = None,
+                      hooks: dict | None = None) -> DocModel:
+    """The per-document path behind both sinks: every part in offset
+    order, pdf parts through ``extract_pdf``, html parts through the
+    DOM main-content strip, text parts through normalize/repair, media
+    parts passed through."""
+    from ..functions import langid
+    from ..functions.htmlextract import parse_main
+    from ..operators.extract import extract_pdf
+    from ..operators.layout import Line, _collapse_ws
+
+    doc = DocModel()
     if scorer == "missing":
         # model path configured but unreadable — reference degrades to a
         # warning and skips the stage (PDFExtract.java:1299-1324)
-        warnings.append(
-            {"method": "sentencejoin", "detail": "model not found",
-             "suggestion": "check sentence-join model prefix path"}
-        )
-    elif scorer is not None:
-        sj_scorer = scorer
+        doc.warnings.append(("sentencejoin", "model not found",
+                             "check sentence-join model prefix path"))
+        scorer = None
+    counts = doc.lang_counts
+    page_base = 0
 
-    items = sorted(spans if spans is not None else [], key=lambda s: s["offset"])
-    for span in items:
+    def clean(text: str | None) -> str:
+        return rules.repair_str(rules.normalize_str(_collapse_ws(text or ""))).strip()
+
+    def add_line(txt: str, para: int, lang: str = "") -> None:
+        doc.spans.append(("text", txt, ""))
+        doc.lines.append(Line(
+            page_base, 0.0, float(para), 1.0, float(para) + 0.5, 12.0, "", "",
+            "normal", "normal", "#000000", txt, 0, block=para, para=para, lang=lang,
+        ))
+
+    for span in sorted(spans if spans is not None else [], key=lambda s: s["offset"]):
         kind = span["kind"]
         if kind == "pdf":
             pdf_bytes = _pdf_payload(span)
             if pdf_bytes is None:
-                error = "pdf: missing payload"
-                warnings.append(
-                    {"method": "payload", "detail": "no base64/text payload",
-                     "suggestion": "provide base64 body in text"}
-                )
+                doc.errors.append("pdf: missing payload")
+                doc.warnings.append(("payload", "no base64/text payload",
+                                     "provide base64 body in text"))
                 continue
-            res = extract_pdf(pdf_bytes, rules, max_pages=max_pages,
-                              sj_scorer=sj_scorer,
+            res = extract_pdf(pdf_bytes, rules, max_pages=max_pages, sj_scorer=scorer,
                               time_budget_s=time_budget_s, hooks=hooks)
-            if permission is None:
-                permission = res.permission
-            n_pages += res.n_pages
-            n_lines += res.n_lines
-            n_media += res.n_media
             if res.error:
-                error = res.error
-            if res.lang and not lang:
-                lang = res.lang
-                lang_dist = [
-                    {"lang": l, "percent": float(p), "rows": int(c)}
-                    for l, p, c in res.lang_dist
-                ]
-            warnings.extend(
-                {"method": m, "detail": d, "suggestion": s}
-                for m, d, s in res.warnings
-            )
-            out_spans.extend(
-                {"kind": k, "text": t, "media_ref": m} for k, t, m, _ in res.spans
-            )
+                doc.errors.append(res.error)
+            if doc.permission is None:
+                doc.permission = res.permission
+            doc.warnings.extend(res.warnings)
+            doc.spans.extend((k, t, m) for k, t, m, _ in res.spans)
+            for ln in res.lines:
+                ln.pageno += page_base
+            doc.lines.extend(res.lines)
+            page_base = max([page_base + res.n_pages] + [ln.pageno for ln in res.lines])
+            for lang, _pct, c in res.lang_dist:
+                counts[lang] = counts.get(lang, 0) + c
+            doc.n_pages += res.n_pages
+            doc.n_lines += res.n_lines
+            doc.n_media += res.n_media
         elif kind == "html":
-            # north-rule HTML tier: DOM-heuristic boilerplate strip →
-            # ordered text/media spans (functions/htmlextract.py)
-            from ..functions import langid
-            from ..functions.htmlextract import parse_main
-            from ..operators.layout import _collapse_ws
-
+            # each main-content block is one paragraph on the part's own
+            # page (an html doc has no page geometry)
             parsed = parse_main(span["text"] or "")
-            counts: dict[str, int] = {}
+            doc.lang_attr = doc.lang_attr or parsed.lang_attr
+            page_base += 1
+            para = 0
             for k2, t2, m2 in parsed.out:
                 if k2 == "media":
-                    out_spans.append(
-                        {"kind": "media", "text": "", "media_ref": m2})
-                    n_media += 1
+                    doc.spans.append(("media", "", m2))
+                    doc.n_media += 1
                     continue
-                txt = rules.repair_str(
-                    rules.normalize_str(_collapse_ws(t2)))
-                if not txt.strip():
+                txt = clean(t2)
+                if not txt:
                     continue
-                out_spans.append(
-                    {"kind": "text", "text": txt.strip(), "media_ref": ""})
-                n_lines += 1
-                ln = langid.detect_reliable(txt)
-                if ln:
-                    counts[ln] = counts.get(ln, 0) + 1
-            if counts and not lang:
-                total = sum(counts.values())
-                ordered = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-                lang = ordered[0][0]
-                lang_dist = [
-                    {"lang": l, "percent": c * 100.0 / total, "rows": c}
-                    for l, c in ordered
-                ]
-            elif not lang and parsed.lang_attr:
-                # declared <html lang> as fallback when no line detected
-                lang = parsed.lang_attr
+                para += 1
+                lang = langid.detect_reliable(txt) or ""
+                if lang:
+                    counts[lang] = counts.get(lang, 0) + 1
+                add_line(txt, para, lang)
+                doc.n_lines += 1
         elif kind == "text":
-            from ..operators.layout import _collapse_ws
-
-            txt = rules.repair_str(rules.normalize_str(_collapse_ws(span["text"] or "")))
-            if txt.strip():
-                out_spans.append({"kind": "text", "text": txt.strip(), "media_ref": ""})
+            txt = clean(span["text"])
+            if txt:
+                page_base += 1
+                add_line(txt, 1)
         elif kind == "media":
-            out_spans.append(
-                {"kind": "media", "text": "", "media_ref": span["media_ref"] or ""}
-            )
-    for i, s in enumerate(out_spans):
-        s["offset"] = i
+            doc.spans.append(("media", "", span["media_ref"] or ""))
+    return doc
+
+
+def _doc_batches(
+    batches: Iterator[pd.DataFrame], render: Callable, columns: list[str],
+    config: dict | None, max_pages: int | None, sj_model=None,
+    sj_threshold: float | None = None, time_budget_s: float | None = None,
+    hooks: dict | None = None,
+) -> Iterator[pd.DataFrame]:
+    """mapInPandas worker of both sinks: one output row per input
+    document, ``render(doc_id, DocModel, extract_ms)``."""
+    rules = _get_ruleset(config)
+    scorer = _resolve_scorer(rules, sj_model, sj_threshold)
+    for b in batches:
+        rows = []
+        for doc_id, spans in zip(b["doc_id"], b["spans"]):
+            t0 = time.monotonic()
+            doc = assemble_document(spans, rules, max_pages, scorer, time_budget_s, hooks)
+            rows.append(render(str(doc_id), doc, int((time.monotonic() - t0) * 1000)))
+        yield pd.DataFrame(rows, columns=columns)
+
+
+def _spans_row(doc_id: str, doc: DocModel, extract_ms: int) -> dict:
+    lang, dist = doc.language()
     return dict(
         doc_id=doc_id,
-        spans=out_spans,
+        spans=[{"kind": k, "text": t, "media_ref": m, "offset": i}
+               for i, (k, t, m) in enumerate(doc.spans)],
         lang=lang,
-        lang_dist=lang_dist,
-        warnings=warnings,
-        error=error,
-        n_pages=n_pages,
-        n_lines=n_lines,
-        n_media=n_media,
-        extract_ms=0,
-        permission=permission,
+        lang_dist=[{"lang": l, "percent": p, "rows": c} for l, p, c in dist],
+        warnings=[{"method": m, "detail": d, "suggestion": s}
+                  for m, d, s in doc.warnings],
+        error=doc.error,
+        n_pages=doc.n_pages,
+        n_lines=doc.n_lines,
+        n_media=doc.n_media,
+        extract_ms=extract_ms,
+        permission=doc.permission,
     )
 
 
@@ -352,64 +378,28 @@ def extract_spans(
     df: DataFrame,
     config: dict | None = None,
     max_pages: int | None = None,
-    num_partitions: int | None = None,
     sj_model=None,
     sj_threshold: float | None = None,
     time_budget_s: float | None = None,
     hooks: dict | None = None,
 ) -> DataFrame:
-    """The extraction operator: (doc_id, spans) → OUTPUT_SCHEMA.
+    """The extraction operator: (doc_id, spans) → OUTPUT_SCHEMA, as a
+    zero-shuffle narrow map.
 
-    Zero-shuffle narrow map when ``num_partitions`` is None; with it, the
-    two-lane skew split described in the module docstring. ``sj_model``
-    enables the W4 sentence-join stage: an ARPA model prefix (visible on
-    executors, e.g. shipped with ``spark-submit --files``; loaded once
-    per Python worker) or an in-memory ``SentenceJoinScorer``.
-    ``time_budget_s`` is the X4 per-doc budget (oversized docs produce
-    partial spans + a timeout warning instead of stalling a task);
-    ``hooks`` are the §2.8 Python callables (closure-pickled to
-    executors — keep them module-level functions, not lambdas over big
-    state)."""
-    spark = df.sparkSession
-    df = df.select("doc_id", "spans")  # column pruning before the UDF
-
-    def run(d: DataFrame) -> DataFrame:
-        return d.mapInPandas(
-            lambda it: _extract_batches(it, config, max_pages, sj_model,
-                                        sj_threshold, time_budget_s, hooks),
-            schema=OUTPUT_SCHEMA,
-        )
-
-    if num_partitions is None:
-        return run(df)
-
-    # two-lane skew split: oversized pdf payloads get one-doc partitions
-    size_col = F.aggregate(
-        "spans",
-        F.lit(0).cast("long"),
-        lambda acc, s: acc
-        + F.when(s["kind"] == "pdf", F.length(F.coalesce(s["text"], F.lit("")))).otherwise(0),
+    ``sj_model`` enables the W4 sentence-join stage: an ARPA model
+    prefix (visible on executors, e.g. shipped with ``spark-submit
+    --files``; loaded once per Python worker) or an in-memory
+    ``SentenceJoinScorer``. ``time_budget_s`` is the X4 per-doc budget
+    (oversized docs produce partial spans + a timeout warning instead of
+    stalling a task); ``hooks`` are the §2.8 Python callables
+    (closure-pickled to executors — keep them module-level functions,
+    not lambdas over big state)."""
+    columns = [f.name for f in OUTPUT_SCHEMA.fields]
+    return df.select("doc_id", "spans").mapInPandas(
+        lambda it: _doc_batches(it, _spans_row, columns, config, max_pages,
+                                sj_model, sj_threshold, time_budget_s, hooks),
+        schema=OUTPUT_SCHEMA,
     )
-    sized = df.withColumn("_pdf_b64len", size_col)
-    small = (
-        sized.filter(F.col("_pdf_b64len") < BIG_DOC_B64_CHARS)
-        .repartition(num_partitions, "doc_id")
-        .drop("_pdf_b64len")
-    )
-    big = (
-        sized.filter(F.col("_pdf_b64len") >= BIG_DOC_B64_CHARS)
-        # round-robin across the FULL partition count: a heavy doc costs
-        # ~100× a light one, so packing two into one task floors the
-        # stage wall-clock (measured: 2×sample4 in one partition capped
-        # 32-core scaling efficiency at ~0.3)
-        .repartition(num_partitions)
-        .drop("_pdf_b64len")
-    )
-    # big lane FIRST: Spark launches union tasks in partition-index order,
-    # so oversized docs (each ~100× a light doc) start at t=0 — LPT-style
-    # packing. Scheduling them last leaves a full heavy-doc straggler tail
-    # (measured +35% wall at 32 cores).
-    return run(big).unionByName(run(small))
 
 
 def extract_spans_mirror_dedup(df: DataFrame, **kwargs) -> DataFrame:
@@ -454,128 +444,31 @@ HTML_SCHEMA = StructType(
 )
 
 
-def _html_batches(
-    batches: Iterator[pd.DataFrame], config: dict | None,
-    max_pages: int | None, keep_br: bool
-) -> Iterator[pd.DataFrame]:
+def _html_row(doc_id: str, doc: DocModel, _extract_ms: int,
+              keep_br: bool = False) -> dict:
     from ..functions.htmlout import render_document, render_error
-    from ..operators.extract import extract_pdf
 
-    rules = _get_ruleset(config)
-    for b in batches:
-        rows = []
-        for doc_id, spans in zip(b["doc_id"], b["spans"]):
-            # A document may carry several pdf spans: accumulate every
-            # successful span's lines (pagenos offset so pages stay
-            # distinct and ordered) and render ONE combined document;
-            # per-span errors are reported alongside, never paired with
-            # another span's html as if they were one extraction.
-            items = sorted(spans if spans is not None else [],
-                           key=lambda s: s["offset"])
-            all_lines: list = []
-            lang_counts: dict[str, int] = {}
-            warnings: list = []
-            errs: list[str] = []
-            permission = None
-            page_base = 0
-            for span in items:
-                if span["kind"] == "html":
-                    # HTML tier through the S7 sink: each main-content
-                    # block becomes one paragraph on its own "page"
-                    # (the html doc has no page geometry); media refs
-                    # are dropped here, matching the reference's
-                    # image-less HTML output (PDFToHtml.java:52 -i)
-                    from ..functions import langid
-                    from ..functions.htmlextract import parse_main
-                    from ..operators.layout import Line, _collapse_ws
-
-                    parsed = parse_main(span["text"] or "")
-                    page_base += 1
-                    para = 0
-                    for k2, t2, _m2 in parsed.out:
-                        if k2 != "text":
-                            continue
-                        txt = rules.repair_str(
-                            rules.normalize_str(_collapse_ws(t2))).strip()
-                        if not txt:
-                            continue
-                        para += 1
-                        ln_lang = langid.detect_reliable(txt) or ""
-                        if ln_lang:
-                            lang_counts[ln_lang] = (
-                                lang_counts.get(ln_lang, 0) + 1)
-                        all_lines.append(Line(
-                            page_base, 0.0, float(para), 1.0,
-                            float(para) + 0.5, 12.0, "", "", "normal",
-                            "normal", "#000000", txt, 0,
-                            block=para, para=para, lang=ln_lang,
-                        ))
-                    if not para and parsed.lang_attr:
-                        lang_counts.setdefault(parsed.lang_attr, 0)
-                    continue
-                if span["kind"] == "text":
-                    from ..operators.layout import Line, _collapse_ws
-
-                    txt = rules.repair_str(rules.normalize_str(
-                        _collapse_ws(span["text"] or ""))).strip()
-                    if txt:
-                        page_base += 1
-                        all_lines.append(Line(
-                            page_base, 0.0, 1.0, 1.0, 1.5, 12.0, "", "",
-                            "normal", "normal", "#000000", txt, 0,
-                            block=1, para=1,
-                        ))
-                    continue
-                if span["kind"] != "pdf":
-                    continue
-                pdf = _pdf_payload(span)
-                if pdf is None:
-                    errs.append("pdf: missing payload")
-                    continue
-                res = extract_pdf(pdf, rules, max_pages=max_pages,
-                                  keep_lines=True)
-                if res.error:
-                    errs.append(res.error)
-                    continue
-                span_max_page = 0
-                for ln in res.lines or []:
-                    ln.pageno += page_base
-                    span_max_page = max(span_max_page, ln.pageno)
-                    all_lines.append(ln)
-                page_base = max(page_base, span_max_page, page_base + res.n_pages)
-                for l, _pct, c in res.lang_dist:
-                    lang_counts[l] = lang_counts.get(l, 0) + c
-                warnings.extend(res.warnings)
-                if res.permission is not None:
-                    permission = res.permission
-            if all_lines or not errs:
-                total = sum(lang_counts.values())
-                ordered = sorted(lang_counts.items(),
-                                 key=lambda kv: (-kv[1], kv[0]))
-                lang = ordered[0][0] if ordered else ""
-                # total can be 0 when the only signal is a declared
-                # <html lang> attribute (count 0, no detected lines)
-                lang_dist = ([(l, c * 100.0 / total, c) for l, c in ordered]
-                             if total else [])
-                html = render_document(
-                    all_lines, lang, lang_dist, warnings,
-                    keep_br=keep_br, permission=permission,
-                )
-            else:
-                html = render_error("; ".join(errs))
-            err = "; ".join(errs) if errs else None
-            rows.append({"doc_id": str(doc_id), "html": html, "error": err})
-        yield pd.DataFrame(rows, columns=["doc_id", "html", "error"])
+    if doc.lines or not doc.errors:
+        lang, dist = doc.language()
+        html = render_document(doc.lines, lang, dist, doc.warnings,
+                               keep_br=keep_br, permission=doc.permission)
+    else:
+        html = render_error(doc.error)
+    return {"doc_id": doc_id, "html": html, "error": doc.error}
 
 
 def extract_html(df: DataFrame, config: dict | None = None,
                  max_pages: int | None = None,
                  keep_br: bool = False) -> DataFrame:
     """S7 HTML sink: (doc_id, spans) → (doc_id, html, error) in the
-    reference's alignment-optimized format — same narrow Arrow-batched
-    shape as extract_spans."""
+    reference's alignment-optimized format — the same document path and
+    narrow Arrow-batched shape as extract_spans. Media spans are dropped,
+    matching the reference's image-less HTML output (PDFToHtml.java:52
+    -i)."""
+    render = functools.partial(_html_row, keep_br=keep_br)
+    columns = [f.name for f in HTML_SCHEMA.fields]
     return df.select("doc_id", "spans").mapInPandas(
-        lambda it: _html_batches(it, config, max_pages, keep_br),
+        lambda it: _doc_batches(it, render, columns, config, max_pages),
         schema=HTML_SCHEMA,
     )
 
@@ -611,7 +504,6 @@ def run_pipeline(
     lineage_ref: str | None = None,
     config: dict | None = None,
     resume: bool = False,
-    num_partitions: int | None = None,
     max_pages: int | None = None,
     sj_model: str | None = None,
     sj_threshold: float | None = None,
@@ -620,7 +512,8 @@ def run_pipeline(
     dedup_mirrors: bool = False,
     input_asof: str | None = None,
 ) -> dict:
-    """spark-submit entry: read → (resume anti-join) → extract → commit.
+    """spark-submit entry: read → widen an under-split scan → (resume
+    anti-join) → extract → commit.
 
     ``input_format="pdf-dir"`` reads a directory of raw PDF files (the
     reference's -I/-B modes); ``"warc"`` reads web-archive files,
@@ -630,6 +523,7 @@ def run_pipeline(
     input to a committed snapshot (TableIO.read_asof) — reprocessing an
     exact historical corpus state. Returns a summary dict (docs in/out,
     run_id)."""
+    from ..runtime import ensure_parallel_scan
     from ..sources.tableio import TableIO
 
     io = TableIO(spark)
@@ -645,6 +539,7 @@ def run_pipeline(
     else:
         df = (io.read_asof(input_ref, input_asof) if input_asof
               else io.read(input_ref))
+    df = ensure_parallel_scan(spark, df)
     if resume and io.exists(output_ref):
         done = io.read(output_ref).select("doc_id")
         # no forced broadcast: on a resume late in a large run the
@@ -653,7 +548,6 @@ def run_pipeline(
         df = df.join(done, "doc_id", "left_anti")
     extract_fn = extract_spans_mirror_dedup if dedup_mirrors else extract_spans
     out = extract_fn(df, config=config, max_pages=max_pages,
-                     num_partitions=num_partitions,
                      sj_model=sj_model, sj_threshold=sj_threshold,
                      time_budget_s=time_budget_s)
     out = out.persist()

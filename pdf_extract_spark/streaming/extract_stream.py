@@ -43,8 +43,9 @@ def extract_docs_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     sdf = reader.parquet(input_dir)
-    # num_partitions stays None: repartition on a stream would shuffle;
-    # scan granularity is the parallelism lever, as in batch
+    # no ensure_parallel_scan: a stream has no fixed scan to measure and a
+    # repartition would shuffle every micro-batch; file granularity
+    # (maxFilesPerTrigger) is the parallelism lever
     return extract_spans(sdf, config=config, max_pages=max_pages,
                          sj_model=sj_model, time_budget_s=time_budget_s)
 

@@ -4,7 +4,6 @@
         --input  <parquet path | iceberg catalog.table> \
         --output <parquet path | iceberg catalog.table> \
         [--lineage <ref>] [--resume] [--input-asof SNAPSHOT] \
-        [--num-partitions N] \
         [--max-pages N] [--config PDFExtract.json] [--html]
 
 Reads the interleaved-document table (doc_id, spans), extracts spans (or
@@ -35,10 +34,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--lineage", default=None)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--num-partitions", type=int, default=None,
-                    help="enable the two-lane skew repartition (for "
-                         "generated/coarse inputs; file scans usually "
-                         "prefer small spark.sql.files.maxPartitionBytes)")
     ap.add_argument("--max-pages", type=int, default=None,
                     help="per-doc page budget (oversized-doc bypass lane)")
     ap.add_argument("--time-budget", type=float, default=None,
@@ -85,6 +80,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.html:
         from pdf_extract_spark.plans.pipeline import extract_html
+        from pdf_extract_spark.runtime import ensure_parallel_scan
         from pdf_extract_spark.sources.tableio import TableIO
 
         io = TableIO(spark)
@@ -94,7 +90,7 @@ def main(argv: list[str] | None = None) -> int:
             src_df = read_pdf_dir(spark, args.input)
         else:
             src_df = io.read(args.input)
-        out = extract_html(src_df, config=config,
+        out = extract_html(ensure_parallel_scan(spark, src_df), config=config,
                            max_pages=args.max_pages, keep_br=args.keep_br)
         run_id = io.write(out, args.output)
         summary = {"run_id": run_id}
@@ -108,7 +104,6 @@ def main(argv: list[str] | None = None) -> int:
             lineage_ref=args.lineage,
             config=config,
             resume=args.resume,
-            num_partitions=args.num_partitions,
             max_pages=args.max_pages,
             sj_model=args.sj_model,
             sj_threshold=args.sj_threshold,

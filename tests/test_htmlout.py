@@ -14,7 +14,7 @@ def _render(name: str) -> str:
 
     pdf = fixture_bytes(name)
     assert pdf is not None
-    res = extract_pdf(pdf, RuleSet(), keep_lines=True)
+    res = extract_pdf(pdf, RuleSet())
     assert res.error is None
     return render_document(res.lines, res.lang, res.lang_dist, res.warnings)
 

@@ -395,3 +395,15 @@ def test_pointed_hebrew_is_not_yiddish():
     # YIVO-pointed Yiddish routes via ligatures/rafe
     yivo_yi = "יעדער מענטש װערט געבױרן פֿרײַ און גלײַך אין כּבֿוד און רעכט."
     assert detect(yivo_yi) == "yi"
+
+
+def test_exclusive_letters_cover_every_language():
+    """Every _LATIN_EXCLUSIVE language reaches the combined char scan,
+    bare single-letter patterns (ł, ə) included."""
+    mapped = set(langid._EXCL_CHAR2LANG.values())
+    assert {lang for _, lang in langid._LATIN_EXCLUSIVE} <= mapped
+    for pat, lang in langid._LATIN_EXCLUSIVE:
+        for ch, mapped_lang in langid._EXCL_CHAR2LANG.items():
+            if pat.search(ch):
+                assert mapped_lang == lang, (ch, lang)
+    assert langid.detect("mały chłopiec szedł do szkoły") == "pl"

@@ -44,7 +44,7 @@ def test_link_rects_parsed():
 
 
 def test_islink_marked_and_restyled_to_modal():
-    res = extract_pdf(_pdf_with_link(), keep_lines=True)
+    res = extract_pdf(_pdf_with_link())
     assert res.error is None
     by_text = {ln.text: ln for ln in res.lines}
     assert not by_text["Line one"].islink

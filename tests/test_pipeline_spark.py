@@ -87,14 +87,6 @@ class TestExtractSpans:
         assert out["good"]["error"] is None
         assert len(out["good"]["spans"]) > 0
 
-    def test_skew_lane_split(self, spark, small_corpus):
-        """num_partitions triggers the two-lane plan; results unchanged."""
-        plain = {r["doc_id"]: r["spans"]
-                 for r in pipeline.extract_spans(small_corpus).collect()}
-        laned = {r["doc_id"]: r["spans"]
-                 for r in pipeline.extract_spans(small_corpus, num_partitions=4).collect()}
-        assert plain == laned
-
 
 class TestPipelineRun:
     def test_run_and_resume(self, spark, tmp_path):
@@ -132,6 +124,20 @@ class TestPipelineRun:
         )
         assert sorted(r["sum(n_docs)"] for r in per_run) == [4, 8]
         assert spark.read.parquet(outp).select("doc_id").distinct().count() == 12
+
+    def test_single_file_input_uses_every_core(self, spark, tmp_path):
+        """A one-file input scans as one partition; run_pipeline widens
+        it to the session's parallelism, so every core extracts."""
+        import glob
+
+        inp = str(tmp_path / "in1")
+        outp = str(tmp_path / "out1")
+        corpus_dataframe(spark, 16, use_fixtures=False).coalesce(1).write.parquet(inp)
+        assert len(glob.glob(inp + "/part-*.parquet")) == 1
+        r = pipeline.run_pipeline(spark, inp, outp)
+        assert r["n_docs"] == 16
+        lin = spark.read.parquet(outp + "_lineage").collect()
+        assert len({row["partition_id"] for row in lin}) >= 4
 
     def test_lineage_columns(self, spark, tmp_path):
         inp = str(tmp_path / "in2")
@@ -254,3 +260,58 @@ def test_run_pipeline_mirror_dedup_with_resume(spark, tmp_path):
     r2 = pipeline.run_pipeline(spark, inp, outp, resume=True,
                                dedup_mirrors=True)
     assert r2["n_docs"] == 0
+
+
+def _part(kind, text="", media_ref=""):
+    return {"kind": kind, "text": text, "media_ref": media_ref}
+
+
+def _b64(pdf: bytes) -> str:
+    return base64.b64encode(pdf).decode()
+
+
+_UNDETECTABLE_FI = ('<html lang="fi"><body><article><h1>Otsikko 2024</h1>'
+                    '<p>12 34 56 78 90 11 22 33 44 55 66.</p></article>'
+                    '</body></html>')
+
+
+@pytest.mark.parametrize("parts,n_errors,lang", [
+    ([_part("pdf", _b64(b"%PDF-not really a pdf")), _part("pdf", _b64(b"garbage"))], 2, ""),
+    ([_part("pdf", _b64(b"garbage")), _part("pdf", _b64(synth_pdf(3, n_pages=1)))], 1, "en"),
+    ([_part("pdf", _b64(synth_pdf(1, n_pages=1))),
+      _part("pdf", _b64(synth_pdf(2, n_pages=1)))], 0, "en"),
+    ([_part("html", _UNDETECTABLE_FI)], 0, "fi"),
+    ([_part("pdf"), _part("text", "A loose text span that rides along with the doc.")], 1, ""),
+], ids=["two-failing-pdfs", "failing-then-good-pdf", "two-good-pdfs",
+        "declared-lang-undetected", "empty-payload-plus-text"])
+def test_sinks_agree(spark, parts, n_errors, lang):
+    """Both sinks render one document model: the spans row's lang,
+    lang_dist, error and warnings equal the HTML head's defaultLang,
+    <languages>, error and <warnings> (semantics in FIXTURES.md §2)."""
+    import html as htmllib
+    import re
+
+    spans = [dict(p, offset=i) for i, p in enumerate(parts)]
+    df = spark.createDataFrame(
+        [("d", spans)],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    row = pipeline.extract_spans(df).collect()[0]
+    hrow = pipeline.extract_html(df).collect()[0]
+    head = hrow.html.split("</head>")[0]
+
+    def attrs(tag):
+        return [tuple(htmllib.unescape(v) for v in m)
+                for m in re.findall(tag, head)]
+
+    default = re.search(r'<defaultLang abbr="([^"]*)" />', head)
+    assert row.lang == (htmllib.unescape(default.group(1)) if default else "")
+    assert [(d.lang, d.percent, d.rows) for d in row.lang_dist] == [
+        (l, float(p), int(c)) for l, p, c in
+        attrs(r'<language abbr="([^"]*)" percent="([^"]*)" rows="([^"]*)" />')]
+    assert [tuple(w) for w in row.warnings] == attrs(
+        r'<warning method="([^"]*)" detail="([^"]*)" suggestion="([^"]*)" />')
+    assert row.error == hrow.error
+    assert (len(row.error.split("; ")) if row.error else 0) == n_errors
+    assert row.lang == lang

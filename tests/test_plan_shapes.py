@@ -394,6 +394,16 @@ def test_ingest_lifecycle_append_is_observable(spark):
     assert any(r.corpus_id % 10 == 5 for r in b2)  # append mattered
 
 
+def test_ingest_lifecycle_table_per_application():
+    """Two applications on one corpus get distinct scratch tables, so a
+    concurrent overwrite never lands between another's probe and append."""
+    from pdf_extract_spark.operators.dedup import ingest_table_name
+
+    a = ingest_table_name("local-1", SF_DIR)
+    assert a == ingest_table_name("local-1", SF_DIR)
+    assert a != ingest_table_name("local-2", SF_DIR)
+
+
 def test_decontaminate_broadcasts_eval_grams(spark):
     """The eval-set n-gram side is small by construction and must
     broadcast — a shuffled corpus⋈eval join would shuffle the full
